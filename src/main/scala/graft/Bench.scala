@@ -485,7 +485,8 @@ object Bench {
       // r16: the SPAN family — window-hash store probes (the smallest
       // per-unit store state, 8 bytes/distinct window); the gate is the
       // fused-scan + two one-row-per-key mark joins of
-      // SpanDedup.statsIncremental. Methodology caveat (SpanBloomAb):
+      // SpanDedup.statsIncremental. Methodology caveat (r16 span Bloom
+      // A/B, recorded in README):
       // ScaleUp's replica corpus adds no NEW distinct windows, so the
       // distinct-keyed stores (exact/segment/span) are replica-invariant
       // by construction — their small-vs-large datum pins the probe's
@@ -579,21 +580,10 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // events.parquet uses TIMESTAMP(NANOS); see graft.Tables.events.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // ERROR, not WARN: per-query function registration emits a WARN per
-    // re-registration, and hundreds of those can crowd the bounded output
-    // tail the driver keeps (the metric line must survive in it).
+    val spark = GraftSession.builder().getOrCreate()
+    // ERROR, not WARN: the metric line must survive in the bounded
+    // output tail a caller keeps, so the bench logs as little as it can.
     spark.sparkContext.setLogLevel("ERROR")
 
     val names = SparkEntry.queries.keys.toSeq.sorted

@@ -405,7 +405,6 @@ object Dedup {
                              storeTable: String,
                              maybeOf: Column => Column): DataFrame = {
     val s = batch.sparkSession
-    graft.functions.Blooms.register(s)
     if (!s.catalog.tableExists(storeTable)) exactGate(batch, idCol, textCol,
       storeTable)
     else {
@@ -487,7 +486,6 @@ object Dedup {
                   maxBucket: Int = 500,
                   bandBloom: Option[Array[Byte]] = None): DataFrame = {
     val s = batchSig.sparkSession
-    graft.functions.Texts.register(s) // sig_overlap
     val bandsT = s"${storeTable}_bands"
     val sigsT = s"${storeTable}_sigs"
     if (!s.catalog.tableExists(bandsT)) batchSig
@@ -580,7 +578,6 @@ object Dedup {
     * O(len) compute with an 8-byte shuffle key.
     */
   def shingles(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame = {
-    graft.functions.Texts.register(df.sparkSession)
     df.select(col(idCol),
         explode(graft.functions.Texts.ngramHashes(col(textCol), n, ShingleHashMod))
           .as("shingle"))
@@ -609,7 +606,6 @@ object Dedup {
     // bit-identical across all three formulations; MinHashSigSpec pins
     // the explode+agg equivalence.
     val p = 2147483647L
-    graft.functions.Texts.register(df.sparkSession)
     // null-text docs are dropped, preserving the explode+agg row set
     // (explode of a null array emitted nothing). Without the filter a
     // null sig would give every null-text doc the SAME band key
@@ -646,7 +642,6 @@ object Dedup {
     // the fused form's clean integer-division slicing as the DEFINED
     // behavior outside that contract, where the composable form's
     // Column./ double arithmetic truncated slice starts per band).
-    graft.functions.Texts.register(sig.sparkSession)
     sig.select(col(idCol),
       posexplode(graft.functions.LshBandKeys.lshBandKeys(col("sig"), bands))
         .as(Seq("band", "bkey")))
@@ -681,7 +676,6 @@ object Dedup {
   private[graft] def boundedBucketPairs(bandRows: DataFrame, idCol: String,
                                  maxBucket: Int,
                                  dedupePairs: Boolean = true): DataFrame = {
-    graft.functions.Texts.register(bandRows.sparkSession)
     val pairs = bandRows
       .groupBy(col("band"), col("bkey"))
       .agg(graft.functions.BoundedIds.boundedIds(maxBucket, col(idCol))
@@ -788,7 +782,6 @@ object Dedup {
     * HOF pair — this runs once per candidate pair.
     */
   def minhashJaccard(pairs: DataFrame, sig: DataFrame, idCol: String): DataFrame = {
-    graft.functions.Texts.register(pairs.sparkSession)
     pairs
       .join(sig.select(col(idCol).as("id1"), col("sig").as("sig1")), "id1")
       .join(sig.select(col(idCol).as("id2"), col("sig").as("sig2")), "id2")
@@ -809,7 +802,6 @@ object Dedup {
     * bit-identical otherwise; SimHash64Spec pins the equivalence.
     */
   def simhash(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    graft.functions.Texts.register(df.sparkSession)
     df.select(col(idCol),
         graft.functions.SimHash64.simhash64(col(textCol)).as("simhash"))
       .filter(col("simhash").isNotNull)
@@ -831,7 +823,6 @@ object Dedup {
 
   private def simhashCandidatesLong(sh: DataFrame, idCol: String,
                                     maxDist: Int, maxBucket: Int): DataFrame = {
-    graft.functions.Texts.register(sh.sparkSession)
     sh.select(col(idCol), col("simhash"),
         posexplode(array((0 until 4).map(b =>
           shiftright(col("simhash"), b * 16).bitwiseAND(0xFFFF)): _*))
@@ -1197,7 +1188,6 @@ object Dedup {
       boundedBucketPairs(vectorBandRows(b, idCol, nPlanes, bands),
         idCol, maxBucket)
     }
-    graft.functions.Vectors.register(bucketed.sparkSession)
     cands
       .join(bucketed.select(col(idCol).as("id1"), col(vecCol).as("__v1")), "id1")
       .join(bucketed.select(col(idCol).as("id2"), col(vecCol).as("__v2")), "id2")
@@ -1259,7 +1249,6 @@ object Dedup {
         capBucketsInline(vectorBandRows(bucketed, idCol, nPlanes, bands),
           Seq("band", "bkey"), maxBucket),
         bandBloom)
-      graft.functions.Vectors.register(s)
       // no pair-level distinct: a pair colliding in several bands reaches
       // the verify joins once per band (bounded by the band count), but
       // the id set is distinct'd after the filter anyway — dropping the
@@ -1486,7 +1475,6 @@ object Dedup {
                    n: Int = 5, minJaccard: Double = 0.2,
                    maxPosting: Int = 500,
                    maxDocFrac: Double = 1.0): DataFrame = {
-    graft.functions.Texts.register(df.sparkSession)
     val exploded = df.select(col(idCol),
       explode(graft.functions.Texts.ngramHashes(col(textCol), n,
         ShingleHashMod)).as("shingle"))

@@ -123,9 +123,9 @@ object SemDedup {
     // cap is blind to embedding dimension (500k 768-dim vectors is
     // gigabytes held by the driver and every executor). Estimate =
     // rows × (dim × element-width + 48 B array/row overhead), dim
-    // probed from one row; default cap 256 MB raw ≈ ≲1 GB of executor
-    // headroom after the ~2-3x hashed-relation framing. The row-count
-    // conf remains as an explicit override. The row COUNT comes from
+    // probed from one non-null row; default cap 256 MB raw ≈ ≲1 GB of
+    // executor headroom after the ~2-3x hashed-relation framing. The
+    // row-count conf remains as an explicit override. The row COUNT comes from
     // the `cells` assignment — one narrow row per vector by
     // construction, and checkpointed by every caller that memoizes the
     // fit — instead of re-executing the caller's full vector plan one
@@ -143,14 +143,15 @@ object SemDedup {
             case org.apache.spark.sql.types.ArrayType(et, _) => et.defaultSize
             case _ => 8
           }
-          val dim = vecs.select(size(col(vecCol)).as("__dim")).head(1) match {
-            case Array(r) if !r.isNullAt(0) => r.getInt(0)
+          // probe a NON-null vector: a null first row would read as
+          // dim 0 and collapse the estimate to n × 48 B
+          val dim = vecs.filter(col(vecCol).isNotNull)
+            .select(size(col(vecCol)).as("__dim")).head(1) match {
+            case Array(r) => r.getInt(0)
             case _ => 0
           }
           n * (dim.toLong * elemW + 48L) <= byteCap
       }
-    graft.functions.Texts.register(vecs.sparkSession)
-    graft.functions.Vectors.register(vecs.sparkSession)
     val idType = vecs.schema(idCol).dataType
     val integralId = idType match {
       case org.apache.spark.sql.types.LongType

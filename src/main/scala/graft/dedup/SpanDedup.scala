@@ -81,10 +81,6 @@ object SpanDedup {
                          useHashKey: Boolean): DataFrame = {
     require(w >= 1, s"spanDedup: window must be >= 1 token, got $w")
     if (useHashKey) {
-      // register into the input's OWN session (the operator-entry-point
-      // contract — ensureRegistered() alone targets the active session,
-      // which differs under multi-session callers like PlanAudit)
-      graft.functions.Texts.register(docs.sparkSession)
       docs
         .select(col("doc_id"), posexplode(
           graft.functions.TokenWindowHashes
@@ -244,8 +240,9 @@ object SpanDedup {
     * through the verify join. The batch-dup rule is independent of the
     * store and unaffected by the filter.
     *
-    * MEASURED COST-NEUTRAL at local scale ([[graft.tools.SpanBloomAb]],
-    * 5-rep medians, foreign-cores 0.00): bloomed 0.41-0.66s vs plain
+    * MEASURED COST-NEUTRAL at local scale (r16 A/B, recorded in README
+    * under "span-store BLOOM pre-filter"; 5-rep medians, foreign-cores
+    * 0.00): bloomed 0.41-0.66s vs plain
     * 0.53-0.73s across THREE filter sizes (16KB near-100%-fpp, store-
     * sized, oversized 2MB) and two stores — neither the filter literal
     * nor the union-vs-marks shape moves the needle, and an official-
@@ -267,7 +264,6 @@ object SpanDedup {
     if (!s.catalog.tableExists(storeTable))
       duplicatedSpansIncremental(batch, w, storeTable, minOccur)
     else {
-      graft.functions.Blooms.register(s)
       val grams = windowKeys(batch, w, useHashKey = true)
       val dupKeys = grams.groupBy(col("k"))
         .agg(count(lit(1)).as("n")).filter(col("n") >= minOccur)

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -159,26 +159,13 @@ object BigramHashCounts {
 
   private val name = "bigram_hash_counts"
 
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => BigramHashCounts(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bigram_counts", exprs => BigramCounts(exprs(0)), "built-in")
-  }
-
-  /** Column API over the registered function (lazily registered against
-    * the active session, as [[Texts.ensureRegistered]]).
-    */
-  def bigramHashCounts(text: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
+  /** Column API over the function [[GraftExtensions]] injects. */
+  def bigramHashCounts(text: Column): Column =
     call_function(name, text)
-  }
 
-  /** Column API for [[BigramCounts]] (lazily registered likewise). */
-  def bigramCounts(text: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
+  /** Column API for [[BigramCounts]] (injected likewise). */
+  def bigramCounts(text: Column): Column =
     call_function("bigram_counts", text)
-  }
 }
 
 /** `bigram_counts(text)` → `array<struct<bigram string, cnt int>>`: the

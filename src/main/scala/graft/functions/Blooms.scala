@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -29,68 +29,28 @@ import org.apache.spark.util.sketch.BloomFilter
   */
 object Blooms {
 
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_agg",
-      exprs => new org.apache.spark.sql.catalyst.expressions.aggregate
-        .BloomFilterAggregate(exprs(0), exprs(1), exprs(2)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_might_contain",
-      // The probe child is routed through [[StableLong]]: Spark's
-      // BloomFilterMightContain.doGenCode emits `(Long)$value`, and
-      // when the probe CONSTANT-FOLDS to a negative literal Janino
-      // cannot parse `(Long)-123L` (it reads a binary minus with the
-      // class name as an operand — "Expression java.lang.Long is not
-      // an rvalue") and the whole stage silently falls back to
-      // interpreted eval. The wrapper pins the value in a local
-      // variable so the cast always applies to a name. Column-probe
-      // plans (every production gate) are unaffected beyond a
-      // JIT-erased long copy.
-      exprs => org.apache.spark.sql.catalyst.expressions
-        .BloomFilterMightContain(exprs(0), StableLong(exprs(1))),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_any", exprs => BloomAny(exprs(0), exprs(1)), "built-in")
-  }
-
-  /** Convenience fallback for the one-session case; same off-thread and
-    * MULTI-SESSION caveats as `Texts.ensureRegistered` (the thread's
-    * active session may not be the session that analyzes the Column —
-    * the gate entry points call `register(batch.sparkSession)`
-    * explicitly instead of relying on this).
-    */
-  private def ensureRegistered(): Unit =
-    SparkSession.getActiveSession.foreach(register)
-
   /** `bloomAgg(hash, items, bits)` → serialized filter (`binary`).
     * `numBits` is bounded by
     * `spark.sql.optimizer.runtime.bloomFilter.maxNumBits` (default 64M
     * bits = 8 MB); size the filter for the store it summarizes.
     */
-  def bloomAgg(hash: Column, expectedItems: Long, numBits: Long): Column = {
-    ensureRegistered()
+  def bloomAgg(hash: Column, expectedItems: Long, numBits: Long): Column =
     call_function("bloom_agg", hash, lit(expectedItems), lit(numBits))
-  }
 
   /** `bloomMightContain(filter, hash)` → boolean; `filter` must be a
     * foldable binary (a driver-held filter passed as a literal — the
     * same shape Spark's own runtime filter injects after its subquery
     * executes) or a scalar subquery.
     */
-  def bloomMightContain(filter: Column, hash: Column): Column = {
-    ensureRegistered()
+  def bloomMightContain(filter: Column, hash: Column): Column =
     call_function("bloom_might_contain", filter, hash)
-  }
 
   /** `bloomAny(filter, hashes)` → boolean: does ANY element of an
     * `array<long>` hash column hit the filter? The set-valued
     * counterpart of [[bloomMightContain]] — see [[BloomAny]].
     */
-  def bloomAny(filter: Column, hashes: Column): Column = {
-    ensureRegistered()
+  def bloomAny(filter: Column, hashes: Column): Column =
     call_function("bloom_any", filter, hashes)
-  }
 }
 
 /** Identity over a `bigint` that BLOCKS constant folding and surfaces

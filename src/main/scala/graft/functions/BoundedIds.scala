@@ -188,12 +188,11 @@ object BoundedIds {
     */
   final class Buffer(var longs: Array[Long], var n: Int)
 
-  /** Column API over the registered function (see [[Texts.register]]):
+  /** Column API over the function [[GraftExtensions]] injects:
     * `boundedIds(max, id)` gives `array<bigint>`,
     * `boundedIds(max, id, payload, ...)` gives `array<struct<c0,c1,...>>`.
     */
   def boundedIds(max: Int, cols: Column*): Column = {
-    Texts.ensureRegistered()
     call_function("bounded_ids",
       cols :+ org.apache.spark.sql.functions.lit(max): _*)
   }

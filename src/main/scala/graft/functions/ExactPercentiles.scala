@@ -2,7 +2,7 @@ package graft.functions
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -88,8 +88,8 @@ final class ValueCountMap(initialCap: Int = 64) {
   *
   * CHOOSING between this and the two-phase histogram shape (a codegen
   * `groupBy(value).count()` folded through the WEIGHTED form — q97's
-  * shape): there is no auto-rewrite, by measurement (r16,
-  * `tools.PercentileAuto`, sf1 60M rows, same JVM, medians-of-5,
+  * shape): there is no auto-rewrite, by measurement (r16 A/B recorded
+  * in README, sf1 60M rows, same JVM, medians-of-5,
   * per-column single-shape cells): two-phase 1.06 s vs count-map
   * 1.34 s at 11 distinct values (l_discount), but count-map 1.03 vs
   * two-phase 1.22 at 47 distinct (l_quantity) and 1.59 vs 2.19 at
@@ -457,26 +457,12 @@ object ExactPercentilesF {
     }
   }
 
-  /** `exact_percentiles(value, ps[, maxDistinct])` — the optional third
+  /** `exactPercentiles(value, ps)`: array of exact linear-interpolation
+    * percentiles, in `ps` order. In SQL,
+    * `exact_percentiles(value, ps[, maxDistinct])` — the optional third
     * (foldable int) argument overrides the distinct-value abort cap.
     */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name,
-      exprs => {
-        val base = ExactPercentilesAgg(exprs(0), psArg(exprs(1)))
-        if (exprs.length >= 3)
-          base.copy(maxDistinct =
-            exprs(2).eval().asInstanceOf[Number].intValue())
-        else base
-      },
-      "built-in")
-
-  /** `exactPercentiles(value, ps)`: array of exact linear-interpolation
-    * percentiles, in `ps` order.
-    */
   def exactPercentiles(value: Column, ps: Seq[Double]): Column = {
-    SparkSession.getActiveSession.foreach(register)
     call_function(name, value,
       org.apache.spark.sql.functions.array(
         ps.map(org.apache.spark.sql.functions.lit): _*))
@@ -493,26 +479,12 @@ object ExactPercentilesF {
     *
     * `exact_percentiles_weighted(value, weight, ps[, maxDistinct])` —
     * the weight may be any integral type, and the optional fourth
-    * argument overrides the distinct-value abort cap, mirroring the
-    * plain registration.
+    * argument overrides the distinct-value abort cap, mirroring
+    * `exact_percentiles`. Column API: `exactPercentilesWeighted(value,
+    * count, ps)`.
     */
-  def registerWeighted(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      wname,
-      exprs => {
-        val base = ExactPercentilesAgg(exprs(0), psArg(exprs(2)),
-          weight = Some(exprs(1)))
-        if (exprs.length >= 4)
-          base.copy(maxDistinct =
-            exprs(3).eval().asInstanceOf[Number].intValue())
-        else base
-      },
-      "built-in")
-
-  /** `exactPercentilesWeighted(value, count, ps)`. */
   def exactPercentilesWeighted(value: Column, count: Column,
                                ps: Seq[Double]): Column = {
-    SparkSession.getActiveSession.foreach(registerWeighted)
     call_function(wname, value, count,
       org.apache.spark.sql.functions.array(
         ps.map(org.apache.spark.sql.functions.lit): _*))
@@ -520,18 +492,11 @@ object ExactPercentilesF {
 
   private val name2 = "exact_percentiles2"
 
-  /** `exact_percentiles2(v1, ps1, v2, ps2)` → struct(p1, p2). */
-  def register2(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name2,
-      exprs => ExactPercentiles2Agg(
-        exprs(0), psArg(exprs(1)), exprs(2), psArg(exprs(3))),
-      "built-in")
-
-  /** Fused two-column percentiles: one aggregate, one per-row update. */
+  /** Fused two-column percentiles: one aggregate, one per-row update;
+    * `exact_percentiles2(v1, ps1, v2, ps2)` → struct(p1, p2).
+    */
   def exactPercentiles2(v1: Column, ps1: Seq[Double],
                         v2: Column, ps2: Seq[Double]): Column = {
-    SparkSession.getActiveSession.foreach(register2)
     def arr(ps: Seq[Double]) = org.apache.spark.sql.functions.array(
       ps.map(org.apache.spark.sql.functions.lit): _*)
     call_function(name2, v1, arr(ps1), v2, arr(ps2))

@@ -2,7 +2,7 @@ package graft.functions
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
@@ -233,18 +233,7 @@ object MisraGriesAgg {
 
   private val name = "mg_topk"
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name,
-      exprs => MisraGriesAgg(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue()),
-      "built-in")
-
-  /** Column API over the registered function (lazily registered against
-    * the active session, as [[Texts.ensureRegistered]]).
-    */
-  def mgTopK(text: Column, cap: Int): Column = {
-    SparkSession.getActiveSession.foreach(register)
+  /** Column API over the function [[GraftExtensions]] injects. */
+  def mgTopK(text: Column, cap: Int): Column =
     call_function(name, text, lit(cap))
-  }
 }

@@ -2,7 +2,7 @@ package graft.functions
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -112,17 +112,7 @@ object HashedScoreExpr {
 object HashedScores {
   private val name = "hashed_score"
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name,
-      exprs => HashedScoreExpr(exprs(0), exprs(1).eval().toString),
-      "built-in")
-
-  /** Column API over the registered function (lazily registered against
-    * the active session, as [[Texts.ensureRegistered]]).
-    */
-  def hashedScore(text: Column, salt: String): Column = {
-    SparkSession.getActiveSession.foreach(register)
+  /** Column API over the function [[GraftExtensions]] injects. */
+  def hashedScore(text: Column, salt: String): Column =
     call_function(name, text, org.apache.spark.sql.functions.lit(salt))
-  }
 }

@@ -4,7 +4,7 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, Da
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -28,7 +28,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * Catalyst plans partial+final aggregation with map-side combine.
   *
   * The ranking hash is an explicit child expression: the default
-  * registration (`kmv_sample`) passes `xxhash64(value)` (seed 42, the
+  * form (`kmv_sample`) passes `xxhash64(value)` (seed 42, the
   * exact hash the sketch applied internally before this was
   * parameterized), while `kmv_sample_by(hash, value, k)` lets a caller —
   * or a correctness fixture (q60) — supply a closed-form permutation so
@@ -172,44 +172,17 @@ object Sketches {
   private[functions] def defaultHash(value: Expression): Expression =
     new org.apache.spark.sql.catalyst.expressions.XxHash64(Seq(value))
 
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name,
-      exprs => KmvSketch(defaultHash(exprs(0)), exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue()),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      byName,
-      exprs => KmvSketch(exprs(0), exprs(1),
-        exprs(2).eval().asInstanceOf[Number].intValue()),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      distinctName,
-      exprs => KmvDistinct(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue()),
-      "built-in")
-  }
-
-  private def ensureRegistered(): Unit =
-    org.apache.spark.sql.SparkSession.getActiveSession.foreach(register)
-
   /** `kmvSample(col, k)`: deterministic k-element uniform sample. */
-  def kmvSample(c: Column, k: Int): Column = {
-    ensureRegistered()
+  def kmvSample(c: Column, k: Int): Column =
     call_function(name, c, org.apache.spark.sql.functions.lit(k))
-  }
 
   /** `kmvSampleBy(hash, value, k)`: bottom-k values ranked by a
     * caller-supplied hash column (fixture/oracle hook; see q60).
     */
-  def kmvSampleBy(h: Column, v: Column, k: Int): Column = {
-    ensureRegistered()
+  def kmvSampleBy(h: Column, v: Column, k: Int): Column =
     call_function(byName, h, v, org.apache.spark.sql.functions.lit(k))
-  }
 
   /** `kmvDistinct(col, k)`: deterministic distinct-count estimate. */
-  def kmvDistinct(c: Column, k: Int): Column = {
-    ensureRegistered()
+  def kmvDistinct(c: Column, k: Int): Column =
     call_function(distinctName, c, org.apache.spark.sql.functions.lit(k))
-  }
 }

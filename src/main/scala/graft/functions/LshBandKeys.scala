@@ -93,9 +93,7 @@ object LshBandKeys {
     out
   }
 
-  /** Column API over the registered function (see [[Texts.register]]). */
-  def lshBandKeys(sig: Column, bands: Int): Column = {
-    Texts.ensureRegistered()
+  /** Column API over the function [[GraftExtensions]] injects. */
+  def lshBandKeys(sig: Column, bands: Int): Column =
     call_function("lsh_band_keys", sig, lit(bands))
-  }
 }

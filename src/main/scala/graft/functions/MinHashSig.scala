@@ -174,10 +174,8 @@ object MinHashSig {
     mins
   }
 
-  /** Column API over the registered function (see [[Texts.register]]). */
+  /** Column API over the function [[GraftExtensions]] injects. */
   def minhashSig(text: Column, numHashes: Int, shingleN: Int,
-                 mod: Long): Column = {
-    Texts.ensureRegistered()
+                 mod: Long): Column =
     call_function("minhash_sig", text, lit(numHashes), lit(shingleN), lit(mod))
-  }
 }

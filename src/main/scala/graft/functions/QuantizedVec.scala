@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -164,20 +164,9 @@ object QuantizedVec {
     else dot.toDouble / (Math.sqrt(na.toDouble) * Math.sqrt(nb.toDouble))
   }
 
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "int8_quantize", es => Int8Quantize(es(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "int8_cosine", es => Int8Cosine(es(0), es(1)), "built-in")
-  }
-
-  def int8Quantize(v: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
+  def int8Quantize(v: Column): Column =
     call_function("int8_quantize", v)
-  }
 
-  def int8Cosine(a: Column, b: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
+  def int8Cosine(a: Column, b: Column): Column =
     call_function("int8_cosine", a, b)
-  }
 }

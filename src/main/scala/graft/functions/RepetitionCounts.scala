@@ -193,9 +193,7 @@ object RepetitionCounts {
     ArrayData.toArrayData(counts)
   }
 
-  /** Column API over the registered function (see [[Texts.register]]). */
-  def repetitionCounts(c: Column): Column = {
-    Texts.ensureRegistered()
+  /** Column API over the function [[GraftExtensions]] injects. */
+  def repetitionCounts(c: Column): Column =
     org.apache.spark.sql.functions.call_function("repetition_counts", c)
-  }
 }

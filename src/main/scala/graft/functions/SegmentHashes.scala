@@ -2,7 +2,7 @@ package graft.functions
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -101,18 +101,7 @@ object SegmentHashes {
 object SegmentHashing {
   private val name = "segment_hashes"
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name,
-      exprs => SegmentHashes(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue()),
-      "built-in")
-
-  /** Column API over the registered function (lazily registered against
-    * the active session, as [[Texts.ensureRegistered]]).
-    */
-  def segmentHashes(text: Column, w: Int): Column = {
-    SparkSession.getActiveSession.foreach(register)
+  /** Column API over the function [[GraftExtensions]] injects. */
+  def segmentHashes(text: Column, w: Int): Column =
     call_function(name, text, lit(w))
-  }
 }

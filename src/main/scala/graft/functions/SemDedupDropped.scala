@@ -254,10 +254,9 @@ object SemDedupDroppedIds {
   final class Buffer(var ids: Array[Long], var vecs: Array[Array[Float]],
                      var n: Int)
 
-  /** Column API (see [[Texts.register]] for the registration contract). */
+  /** Column API over the function [[GraftExtensions]] injects. */
   def droppedIds(maxCluster: Int, minCosine: Double,
                  id: Column, vec: Column): Column = {
-    Texts.ensureRegistered()
     call_function("semdedup_dropped_ids", id, vec,
       org.apache.spark.sql.functions.lit(maxCluster),
       org.apache.spark.sql.functions.lit(minCosine))

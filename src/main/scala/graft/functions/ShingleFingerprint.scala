@@ -104,9 +104,7 @@ object ShingleFingerprint {
     false
   }
 
-  /** Column API over the registered function (see [[Texts.register]]). */
-  def shingleFingerprint(text: Column, n: Int): Column = {
-    Texts.ensureRegistered()
+  /** Column API over the function [[GraftExtensions]] injects. */
+  def shingleFingerprint(text: Column, n: Int): Column =
     call_function("shingle_fingerprint", text, lit(n))
-  }
 }

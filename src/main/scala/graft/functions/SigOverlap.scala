@@ -86,9 +86,7 @@ case class SigOverlap(left: Expression, right: Expression)
 }
 
 object SigOverlap {
-  /** Column API over the registered function (see [[Texts.register]]). */
-  def sigOverlap(a: Column, b: Column): Column = {
-    Texts.ensureRegistered()
+  /** Column API over the function [[GraftExtensions]] injects. */
+  def sigOverlap(a: Column, b: Column): Column =
     org.apache.spark.sql.functions.call_function("sig_overlap", a, b)
-  }
 }

@@ -104,9 +104,7 @@ object SimHash64 {
     }
   }
 
-  /** Column API over the registered function (see [[Texts.register]]). */
-  def simhash64(text: Column): Column = {
-    Texts.ensureRegistered()
+  /** Column API over the function [[GraftExtensions]] injects. */
+  def simhash64(text: Column): Column =
     call_function("simhash64", text)
-  }
 }

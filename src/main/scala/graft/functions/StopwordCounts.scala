@@ -132,15 +132,9 @@ object StopwordCountsExpr {
     counts
   }
 
-  /** Column API over the registered function (see [[graft.functions.Texts.register]]):
-    * registration is session-scoped, so every graft entry point that uses
-    * the text tier registers it first, and `GraftExtensions` injects it
-    * for cluster deployments.
-    */
-  def stopwordCounts(c: Column): Column = {
-    Texts.ensureRegistered()
+  /** Column API over the function [[GraftExtensions]] injects. */
+  def stopwordCounts(c: Column): Column =
     org.apache.spark.sql.functions.call_function("stopword_counts", c)
-  }
 }
 
 /** Fused corpus-curation tier-1 predicate:
@@ -238,11 +232,8 @@ object CurateTier1 {
       case (l, i) if langs.contains(l) => 1 << i
     }.sum
 
-  /** Column API (see [[StopwordCountsExpr.stopwordCounts]] for the
-    * registration contract).
-    */
+  /** Column API over the function [[GraftExtensions]] injects. */
   def tier1Keep(c: Column, langs: Seq[String], minQuality: Double): Column = {
-    Texts.ensureRegistered()
     org.apache.spark.sql.functions.call_function("curate_tier1", c,
       org.apache.spark.sql.functions.lit(maskFor(langs)),
       org.apache.spark.sql.functions.lit(minQuality))

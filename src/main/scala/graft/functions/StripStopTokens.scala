@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow}
@@ -140,17 +140,9 @@ object StripStopTokens {
 
   private val name = "strip_stop_tokens"
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => StripStopTokensExpr(exprs(0), exprs(1)), "built-in")
-
-  /** Column API over the registered function (lazily registered against
-    * the active session, as [[Texts.ensureRegistered]]).
-    */
-  def stripStopTokens(text: Column, stop: Seq[String]): Column = {
-    SparkSession.getActiveSession.foreach(register)
+  /** Column API over the function [[GraftExtensions]] injects. */
+  def stripStopTokens(text: Column, stop: Seq[String]): Column =
     call_function(name, text, lit(stop.toArray))
-  }
 
   /** The shared ENFORCEMENT projection of the batch and streaming
     * stop-token surfaces ([[graft.text.HeavyHitters.dropStopTokens]] /
@@ -161,7 +153,6 @@ object StripStopTokens {
     */
   def stripProjection(docs: DataFrame, idCol: String, textCol: String,
                       stop: Seq[String]): DataFrame = {
-    register(docs.sparkSession)
     docs.select(col(idCol), stripStopTokens(col(textCol), stop).as("s"))
       .select(col(idCol),
         coalesce(col("s.n_toks").cast("long"), lit(0L)).as("n_toks"),

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -186,24 +186,11 @@ object TermCounts {
 
   private val name = "term_counts"
 
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => TermCounts(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "ws_token_count", exprs => WsTokenCount(exprs(0)), "built-in")
-  }
-
-  /** Column API over the registered function (lazily registered against
-    * the active session, as [[Texts.ensureRegistered]]).
-    */
-  def termCounts(text: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
+  /** Column API over the function [[GraftExtensions]] injects. */
+  def termCounts(text: Column): Column =
     call_function(name, text)
-  }
 
-  /** Column API for [[WsTokenCount]] (lazily registered likewise). */
-  def wsTokenCount(text: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
+  /** Column API for [[WsTokenCount]] (injected likewise). */
+  def wsTokenCount(text: Column): Column =
     call_function("ws_token_count", text)
-  }
 }

@@ -122,9 +122,7 @@ object TokenWindowHashes {
     new GenericArrayData(out)
   }
 
-  /** Column API over the registered function (see [[Texts.register]]). */
-  def tokenWindowHashes(text: Column, w: Int): Column = {
-    Texts.ensureRegistered()
+  /** Column API over the function [[GraftExtensions]] injects. */
+  def tokenWindowHashes(text: Column, w: Int): Column =
     call_function("token_window_hashes", text, lit(w))
-  }
 }

@@ -2,7 +2,7 @@ package graft.functions
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -149,21 +149,9 @@ object VecCentroidQ {
 object VecCentroid {
   private val name = "vec_centroid"
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name,
-      exprs => VecCentroidQ(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].longValue()),
-      "built-in")
-
-  private def ensureRegistered(): Unit =
-    SparkSession.getActiveSession.foreach(register)
-
   /** `vecCentroid(vec, scale)`: exact quantized mean vector as
     * `array<double>` (see [[VecCentroidQ]] for the arithmetic contract).
     */
-  def vecCentroid(vec: Column, scale: Long = 1000000L): Column = {
-    ensureRegistered()
+  def vecCentroid(vec: Column, scale: Long = 1000000L): Column =
     call_function(name, vec, org.apache.spark.sql.functions.lit(scale))
-  }
 }

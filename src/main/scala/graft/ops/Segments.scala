@@ -174,7 +174,6 @@ object Segments {
     * them via a left join on the docs frame).
     */
   private def segmentKeyRows(docs: DataFrame, w: Int): DataFrame = {
-    graft.functions.SegmentHashing.register(docs.sparkSession)
     docs.select(col("doc_id"),
       posexplode(graft.functions.SegmentHashing
         .segmentHashes(col("text"), w)).as(Seq("seg_no", "h")))
@@ -308,7 +307,6 @@ object Segments {
   def segmentGateRowsBloom(batch: DataFrame, w: Int, storeTable: String,
                            bloom: Array[Byte]): DataFrame = {
     val s = batch.sparkSession
-    graft.functions.Blooms.register(s)
     if (!s.catalog.tableExists(storeTable)) segmentGateRows(batch, w,
       storeTable)
     else {

@@ -77,7 +77,6 @@ object CorpusPipeline {
     * near-dup cluster.
     */
   def curate(docs: DataFrame, cfg: Config = Config()): DataFrame = {
-    graft.functions.Texts.register(docs.sparkSession) // stopword_counts
     def cp(suffix: String)(df: DataFrame): DataFrame = cfg.scope match {
       case Some(k) => graft.util.Checkpoints.scoped(s"$k:$suffix")(df)
       case None => df.localCheckpoint()
@@ -174,7 +173,6 @@ object CorpusPipeline {
     */
   def curateIncremental(batch: DataFrame, storeTable: String,
                         storePath: String, cfg: Config = Config()): DataFrame = {
-    graft.functions.Texts.register(batch.sparkSession) // stopword_counts
     val filtered = batch
       .filter(graft.functions.CurateTier1
         .tier1Keep(col("text"), cfg.langs, cfg.minQuality))

@@ -205,7 +205,8 @@ object DailyStoreMerge {
     // `_schema.json` sidecar every evolving merge stamps (O(1) — the
     // Delta-log move; an always-mergeSchema guard was tried first and
     // measurably scaled with store FILE COUNT: +2.0 s flat overhead on
-    // a 1,024-day vs 256-day store in the r20 MergeScaling A/B);
+    // a 1,024-day vs 256-day store in the r20 merge-scaling A/B,
+    // BENCH_SOLO.r20_merge_scaling);
     // without a sidecar, plain inference is sound for connector-written
     // stores (every pre-evolution file carries the same set), and a
     // mismatch re-checks through one mergeSchema pass before failing so
@@ -327,7 +328,7 @@ object DailyStoreMerge {
     // full-store read filtered by day: that shape re-LISTS every
     // partition directory per merge, a metadata cost that grows with
     // the store even though the scan itself prunes (the r20
-    // MergeScaling A/B measured ~+2.3 s on a 1,024- vs 256-day store
+    // merge-scaling A/B measured ~+2.3 s on a 1,024- vs 256-day store
     // from exactly this). Touched days with no existing directory
     // (pure inserts into new days) contribute no rows by construction.
     val dirByValue: Map[String, String] = rootDayDirs.map { nm =>

@@ -117,10 +117,7 @@ object Dsir {
       if (useHashKey) {
         // fused scan path (r17): the flag rides the doc row through the
         // pre-hashed, pre-collapsed stream; one count exchange carries
-        // BOTH models' counters (c_t alongside c_r). Register against
-        // the frame's own session (the Texts convention) — the Column
-        // API's active-session fallback is wrong under newSession audits
-        graft.functions.BigramHashCounts.register(pool.sparkSession)
+        // BOTH models' counters (c_t alongside c_r)
         val flagged = pool.select(
             isTarget.cast("boolean").as("is_t"),
             explode(graft.functions.BigramHashCounts.bigramHashCounts(
@@ -227,7 +224,8 @@ object Dsir {
     * output in plain Scala, independent of every operator under test;
     * the q112 oracle freezes that reconstruction as an answer key
     * (xxhash64 with seed 42 is a fixed public function, so the frozen
-    * rows are stable; provenance: [[graft.tools.FreezeQ112]]). Shared
+    * rows are stable; DsirSpec's collision-merge test is their
+    * provenance). Shared
     * here so the spec and the catalog entry can never drift onto
     * different fixtures.
     */

@@ -3,7 +3,6 @@ package graft.tools
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Counts Spark jobs one catalog query launches (a floor-cost probe:
   * each job pays fixed scheduling latency regardless of data volume).
@@ -13,19 +12,14 @@ object JobCount {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val n = new AtomicInteger()
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit =
         n.incrementAndGet()
     })
-    graft.SparkEntry.queries(name)(spark, dir).count() // warm (registration etc.)
+    graft.SparkEntry.queries(name)(spark, dir).count() // warm
     Thread.sleep(500); n.set(0)
     graft.SparkEntry.queries(name)(spark, dir).count()
     Thread.sleep(500)

@@ -61,7 +61,6 @@ object OracleMargins {
     * to stay well below it.
     */
   def embeddingMargin(spark: SparkSession, dir: String): Double = {
-    graft.functions.Vectors.register(spark)
     val v = graft.Tables(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding")).localCheckpoint()
     v.select(col("vec_id").as("id1"), col("embedding").as("v1"))
@@ -73,13 +72,7 @@ object OracleMargins {
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val (q37Rows, organicPos, q38Rows, organicHam) = measure(spark, dir)
     println(s"q37 oracled rows (est>=0.99): $q37Rows")

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.dedup.Dedup
@@ -25,16 +25,7 @@ object ProfileHeavies {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("data/sf1")
     val reps = args.lift(1).map(_.toInt).getOrElse(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     def timed(what: String)(f: => DataFrame): Unit = {
@@ -66,7 +57,6 @@ object ProfileHeavies {
     // ---------------- q45: curation composition stages -----------------
     locally {
       import graft.text.TextAnalysis
-      graft.functions.Texts.register(spark)
       val corpus = graft.catalog.DedupQueries
         .curationCorpusForAudit(spark, dir)
       timed("q45 corpus read (memoized cp)")(corpus)
@@ -144,7 +134,6 @@ object ProfileHeavies {
       .localCheckpoint()
     println(s"[heavies] q83 pair count = ${pairs.count()}, " +
       s"vec count = ${all.count()}")
-    graft.functions.Vectors.register(spark)
     timed("q83 verify joins+cosine (from cp)")(pairs
       .join(all.select(col("vec_id").as("id1"), col("embedding").as("__v1")), "id1")
       .join(all.select(col("vec_id").as("id2"), col("embedding").as("__v2")), "id2")

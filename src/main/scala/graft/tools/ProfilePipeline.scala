@@ -20,15 +20,7 @@ import graft.text.TextAnalysis
 object ProfilePipeline {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     for (pass <- 1 to 2) runPass(spark, dir, pass)
@@ -43,7 +35,6 @@ object ProfilePipeline {
       r
     }
 
-    graft.functions.Texts.register(spark) // stopword_counts
     val docs = graft.Tables(spark, dir, "documents")
     val cfg = graft.pipelines.CorpusPipeline.Config(
       langs = Seq("en", "es", "fr", "de", "zh"), minQuality = 0.0)

@@ -2,10 +2,8 @@ package graft.tools
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.SparkSession
-
 /** Times a comma-separated SET of catalog queries in one JVM — the
-  * multi-query companion to [[TimeQuery]], built for controlled A/B
+  * multi-query companion to [[graft.Bench]], built for controlled A/B
   * attribution across revisions (run this main alternately from two
   * checkouts in one machine-load window; each invocation is its own
   * JVM with identical session settings, so per-query medians compare
@@ -31,7 +29,6 @@ object TimeSet {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val reps = args.lift(1).map(_.toInt).getOrElse(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val mode = sys.env.getOrElse("SPARK_GRAFT_CONSUME", "materialize")
     require(mode == "materialize" || mode == "count",
       s"SPARK_GRAFT_CONSUME must be materialize|count, got $mode")
@@ -41,15 +38,7 @@ object TimeSet {
     val names = sys.env.get("SPARK_GRAFT_SET")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse(graft.SparkEntry.queries.keys.toSeq.sorted)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n => // untimed warm-up
       try consume(graft.SparkEntry.queries(n)(spark, dir))

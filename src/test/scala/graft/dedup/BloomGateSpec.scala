@@ -27,7 +27,6 @@ class BloomGateSpec extends SparkSpec {
     // StableLong wrapper Spark's own `(Long)$value` codegen miscompiles
     // under Janino on exactly this shape and the stage silently drops
     // to interpreted eval (caught by ExtCheck in r14)
-    graft.functions.Blooms.register(spark)
     val got = spark.sql("""
       SELECT bloom_might_contain(
                (SELECT bloom_agg(xxhash64(x), 3L, 8192L)

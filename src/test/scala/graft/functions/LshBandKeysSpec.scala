@@ -14,7 +14,6 @@ import graft.SparkSpec
 class LshBandKeysSpec extends SparkSpec {
   import spark.implicits._
 
-  Texts.register(spark)
 
   private def composable(bands: Int) = {
     val r = size(col("sig")) / bands

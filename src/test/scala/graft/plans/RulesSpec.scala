@@ -10,11 +10,6 @@ import graft.functions.Vectors
 class RulesSpec extends SparkSpec {
   import spark.implicits._
 
-  private def setup() = {
-    Vectors.register(spark)
-    Rules.register(spark)
-  }
-
   // File-backed input: ConvertToLocalRelation would eagerly evaluate a
   // LocalRelation projection before user-provided optimizer rules run.
   private lazy val vecs: String = {
@@ -25,7 +20,6 @@ class RulesSpec extends SparkSpec {
   }
 
   test("FoldSelfCosine rewrites cosine_sim(x, x) to self_cosine in the plan") {
-    setup()
     val df = spark.read.parquet(vecs)
       .select(Vectors.cosineSim(col("v"), col("v")).as("c"))
     val optimized = df.queryExecution.optimizedPlan.toString
@@ -34,7 +28,6 @@ class RulesSpec extends SparkSpec {
   }
 
   test("rewrite preserves semantics: 1.0 / 0.0 zero-norm / null") {
-    setup()
     // note: this is the exact-math value; the unrewritten expression
     // returns 0.9999999999999998 (sqrt rounding) — the rule is the MORE
     // accurate of the two.
@@ -45,7 +38,6 @@ class RulesSpec extends SparkSpec {
   }
 
   test("distinct columns are left alone") {
-    setup()
     val df = spark.read.parquet(vecs).as("a")
       .crossJoin(spark.read.parquet(vecs).as("b"))
       .select(Vectors.cosineSim(col("a.v"), col("b.v")).as("c"))
